@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: runs every declared query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
   * `{"metric":...,"value":N,"unit":"sec","queries":{...},"errors":{...},"sf":...}`.
@@ -20,52 +18,26 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // partition sizing via the soak-derived rule (ops/Skew): resolves
-    // to the cpus floor at every fixture scale (bench numbers stay
-    // protocol-comparable across rounds); a soak-scale sf dir engages
-    // the bytes/128MB arithmetic. SPARK_GRAFT_SHUFFLE overrides.
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      graft.ops.Skew.suggestedShufflePartitions(
-        graft.ops.Skew.dirBytes(
-          new org.apache.hadoop.conf.Configuration(), sfDir),
-        minParts = cpus.toInt).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // record the input layout's scan parallelism so CPU-dense scan-side
-    // chains can fan out when the layout under-parallelizes them
-    // (ops/Skew.fanOutForCpu; no-op at cluster-scale layouts)
-    graft.ops.Skew.recordScanParallelism(spark, sfDir)
-
-    // warmup: touch every table once, exercise codegen + IO paths
-    Seq("lineitem", "orders", "documents", "embeddings").foreach { t =>
-      Tables.table(spark, sfDir, t).count()
-    }
-    Tables.events(spark, sfDir).count()
+    val queries = SparkEntry.queries
+    // optional comma-separated selection for targeted local measurement
+    // (the per-round driver run leaves it unset = all)
+    val names = Driver.select(queries.keys.toSeq,
+      sys.env.get("SPARK_GRAFT_ONLY").map(Driver.tokens).getOrElse(Nil)).sorted
+    val spark = Driver.session(Driver.layoutBytes(sfDir))
+    Driver.warmUp(spark, sfDir)
 
     val loadBefore = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     val iters = math.max(sys.env.getOrElse("SPARK_GRAFT_ITERS", "5").toInt, 1)
-    // optional comma-separated name-prefix filter for targeted local
-    // measurement (the per-round driver run leaves it unset = all)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSeq)
     val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
-      .foreach { case (name, fn) =>
+    names.foreach { name =>
       def timed(): Option[Double] = {
         val t0 = System.nanoTime()
-        // withStaged: each iteration builds fresh plans, so each must
-        // also release the intermediates it pinned — the unpersist is
-        // inside the timed region because a real deployment pays it too
-        try { graft.ops.Staged.withStaged { fn(spark, sfDir).count() }
+        // each iteration builds fresh plans and releases what it pinned;
+        // the unpersist is inside the timed region because a real
+        // deployment pays it too
+        try { Driver.run(spark, sfDir, queries(name))(_.count())
           Some((System.nanoTime() - t0) / 1e9) }
         catch {
           case e: Throwable =>

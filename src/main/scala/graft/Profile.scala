@@ -1,51 +1,35 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round measurement harness (guide §1): run named queries
   * once each under a stage-metrics listener and print, per query, the
   * wall time plus every stage's duration / task count / shuffle and
   * spill bytes — the attribution the bench's single number can't give.
   * Also dumps `.explain("formatted")` to plans/<tag>/<query>_<suffix>.txt
-  * when SPARK_GRAFT_PLANDIR is set.
+  * when SPARK_GRAFT_PLANDIR is set. The arguments select queries by
+  * [[Driver.select]]'s rule (exact name, else prefix); none selects
+  * every query, which with SPARK_GRAFT_PLANDIR dumps the whole
+  * inventory's plans.
   *
   * Usage:
-  *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
+  *   SPARK_GRAFT_SF_DIR=... \
   *     sbt "runMain graft.Profile q207_host_quota q133_corpus_pipeline_clean"
   */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val planDir = sys.env.get("SPARK_GRAFT_PLANDIR")
     val planSuffix = sys.env.getOrElse("SPARK_GRAFT_PLANSUFFIX", "before")
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      graft.ops.Skew.suggestedShufflePartitions(
-        graft.ops.Skew.dirBytes(
-          new org.apache.hadoop.conf.Configuration(), sfDir),
-        minParts = cpus.toInt).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.maxPlanStringLength",
-        sys.env.getOrElse("SPARK_GRAFT_PLANSTR", "2147483632"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.ops.Skew.recordScanParallelism(spark, sfDir)
+    val queries = SparkEntry.queries
+    val names = Driver.select(queries.keys.toSeq.sorted, args.toSeq)
+    val spark = Driver.session(Driver.layoutBytes(sfDir))
     // SPARK_GRAFT_STAGEMODE=persist dumps plans with staging boundaries
     // left visible (Staged.stageCut's plan-inspection mode)
     sys.env.get("SPARK_GRAFT_STAGEMODE")
       .foreach(m => spark.conf.set("spark.graft.stageCutMode", m))
 
-    // warmup identical to Bench so codegen/IO startup isn't charged
-    Seq("lineitem", "orders", "documents", "embeddings").foreach { t =>
-      Tables.table(spark, sfDir, t).count()
-    }
-    Tables.events(spark, sfDir).count()
+    Driver.warmUp(spark, sfDir)
 
     @volatile var collect = false
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -71,14 +55,11 @@ object Profile {
       }
     })
 
-    args.foreach { name =>
-      val fn = SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown query $name"))
+    names.foreach { name =>
       stages.clear(); jobs.clear()
       collect = true
       val t0 = System.nanoTime()
-      graft.ops.Staged.withStaged {
-        val df = fn(spark, sfDir)
+      Driver.run(spark, sfDir, queries(name)) { df =>
         planDir.foreach { pd =>
           new java.io.File(pd).mkdirs()
           val w = new java.io.PrintWriter(s"$pd/${name}_$planSuffix.txt")

@@ -102,53 +102,18 @@ object Soak {
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_soak"
     val replicas = if (args.length > 2) args(2).toInt else 10
     val mode = if (args.length > 3) args(3) else "indep"
-    val queries =
-      if (args.length > 4) args(4).split(",").map(_.trim).toSeq
-      else defaultQueries
     require(Seq("indep", "dup").contains(mode), s"mode indep|dup, got $mode")
     val registry = SparkEntry.queries ++ soakOnly
-    val unknown = queries.toSet -- registry.keySet
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val queries = Driver.select(registry.keys.toSeq.sorted,
+      if (args.length > 4) Driver.tokens(args(4)) else defaultQueries)
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // The scale knob under test: the driver bench pins 32 shuffle
-    // partitions (local[32] guidance), but the 10× soak is exactly the
-    // regime where a real cluster RAISES partition counts (AQE target
-    // sizes / manual spark.sql.shuffle.partitions) so shuffle blocks
-    // keep fitting in task memory. The DEFAULT is now the round-10
-    // lesson as a function — Skew.suggestedShufflePartitions over the
-    // derived corpus's projected bytes (source bytes × replicas) — so
-    // an un-overridden soak runs at the sizing a cluster's AQE would
-    // pick; SPARK_GRAFT_SHUFFLE forces a specific count (how the
-    // 32-vs-256 q62 control pair was measured).
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      graft.ops.Skew.suggestedShufflePartitions(
-        graft.ops.Skew.dirBytes(
-          new org.apache.hadoop.conf.Configuration(), srcDir) * replicas,
-        minParts = cpus.toInt).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // NOTE the heap knob is SPARK_DRIVER_MEM (build.sbt forks the
-      // JVM with -Xmx from it) — setting spark.driver.memory here
-      // would be a silent no-op: in local mode the driver JVM is
-      // already running when the builder executes. Round 11 learned
-      // this the hard way: a "16g" control leg via the old
-      // SPARK_GRAFT_MEM conf actually ran at 8g and OOM-crashed.
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // fan-out layout probe (ops/Skew.fanOutForCpu), on the DERIVED
-    // corpus's projected bytes — same source-bytes × replicas ruler as
-    // the shuffle sizing above
-    spark.conf.set(graft.ops.Skew.ScanParallelismKey,
-      graft.ops.Skew.scanParallelismFor(
-        graft.ops.Skew.dirBytes(
-          spark.sparkContext.hadoopConfiguration, srcDir) * replicas,
-        org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-          spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")))
-        .toString)
+    // Partition sizing is the scale knob under test: at 10× data a real
+    // cluster RAISES partition counts so shuffle blocks keep fitting in
+    // task memory. The session is sized from the DERIVED corpus's
+    // projected bytes (source bytes × replicas), the sizing a cluster's
+    // AQE would pick; SPARK_GRAFT_SHUFFLE forces a specific count (how
+    // the 32-vs-256 q62 control pair was measured).
+    val spark = Driver.session(Driver.layoutBytes(srcDir) * replicas)
 
     // ---- derive the corpus ----
     val reps = spark.range(replicas.toLong)
@@ -166,7 +131,7 @@ object Soak {
       .select((col("doc_id") + col("__r") * 10000000L).as("doc_id"),
         saltedText.as("text"), col("lang"), col("source"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-      .repartition(cpus.toInt)
+      .repartition(spark.sparkContext.defaultParallelism)
       .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
     val emb = Tables.embeddings(spark, srcDir)
     val saltedEmb = mode match {
@@ -184,7 +149,7 @@ object Soak {
     emb.crossJoin(broadcast(reps))
       .select((col("vec_id") + col("__r") * 10000000L).as("vec_id"),
         saltedEmb.as("embedding"), col("label"))
-      .repartition(cpus.toInt)
+      .repartition(spark.sparkContext.defaultParallelism)
       .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
     val nDocs = spark.read.parquet(s"$outDir/documents.parquet").count()
     val nVecs = spark.read.parquet(s"$outDir/embeddings.parquet").count()
@@ -203,9 +168,7 @@ object Soak {
       Thread.sleep(1500) // let the listener bus drain the previous query
       listener.reset()
       val t0 = System.nanoTime()
-      val rows = graft.ops.Staged.withStaged {
-        registry(name)(spark, outDir).count()
-      }
+      val rows = Driver.run(spark, outDir, registry(name))(_.count())
       val sec = (System.nanoTime() - t0) / 1e9
       Thread.sleep(1500) // drain async task-end events before reading
       println(f"$name%-28s $rows%12d $sec%8.1f ${gb(listener.inputBytes.get)} " +

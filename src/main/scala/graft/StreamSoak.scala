@@ -1,7 +1,6 @@
 package graft
 
 import graft.streaming.{CorpusStream, StreamDoc}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import java.sql.Timestamp
 
@@ -38,13 +37,8 @@ object StreamSoak {
     val fresh = if (args.length > 1) args(1).toInt else 150
     val refetchRecent = fresh / 3
     val refetchOld = fresh / 3
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // no input directory: the session takes the cpus floor
+    val spark = Driver.session(layoutBytes = 0L)
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 

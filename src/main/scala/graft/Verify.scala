@@ -5,48 +5,27 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // arg 3 (optional, builder-side pre-checks only — the driver passes
-    // two): comma-separated query names to dump instead of the full set
     val Array(sfDir, outDir) = args.take(2)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    // a typo'd name would otherwise filter everything out and exit 0 —
-    // a pre-check that silently verifies nothing
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // partition sizing via the soak-derived rule (ops/Skew): the
-    // fixture scales resolve to the cpus floor (identical behavior to
-    // the old hard pin); a soak-scale sf dir engages the bytes/128MB
-    // arithmetic. SPARK_GRAFT_SHUFFLE stays the explicit override.
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      graft.ops.Skew.suggestedShufflePartitions(
-        graft.ops.Skew.dirBytes(
-          new org.apache.hadoop.conf.Configuration(), sfDir),
-        minParts = cpus.toInt).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // same fan-out layout probe as Bench (ops/Skew.fanOutForCpu) — the
-    // verify dumps must run the exact plans the bench times, so the
-    // DuckDB gate certifies the fanned-out shape
-    graft.ops.Skew.recordScanParallelism(spark, sfDir)
+    // arg 3 (optional, builder-side pre-checks only — the driver passes
+    // two): comma-separated names or name prefixes ([[Driver.select]])
+    // to dump instead of the full set
+    val names = Driver.select(SparkEntry.queries.keys.toSeq.sorted,
+      args.drop(2).headOption.map(Driver.tokens).getOrElse(Nil))
+    val spark = Driver.session(Driver.layoutBytes(sfDir))
+    dump(spark, sfDir, outDir, names)
+    spark.stop()
+  }
+
+  /** Writes each named query's result to `outDir/<name>` (parquet, one
+    * file) and the oracle inventory to `outDir/oracle_sql.json`. A query
+    * that throws is reported on stderr and the rest still run. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           names: Seq[String]): Unit = {
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      // withStaged: unpin any intermediate a query persisted (shingle
-      // tables, range exchanges) once its write completed — caches must
-      // not accumulate across the 60-query session
-      try graft.ops.Staged.withStaged {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+    val queries = SparkEntry.queries
+    names.foreach { name =>
+      try Driver.run(spark, sfDir, queries(name)) {
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -67,6 +46,5 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

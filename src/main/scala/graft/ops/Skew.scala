@@ -161,17 +161,23 @@ object Skew {
     * directory's bytes at `spark.sql.files.maxPartitionBytes` — 1 for
     * the single-file fixture tables, thousands at corpus scale. */
   def recordScanParallelism(spark: org.apache.spark.sql.SparkSession,
-                            sfDir: String): Unit = {
+                            sfDir: String): Unit =
+    recordScanParallelism(spark,
+      dirBytes(spark.sparkContext.hadoopConfiguration, sfDir))
+
+  /** [[recordScanParallelism]] over a byte count the caller already
+    * holds — a derived corpus's projected size (Soak: source bytes ×
+    * replicas) has no directory to probe yet. */
+  def recordScanParallelism(spark: org.apache.spark.sql.SparkSession,
+                            layoutBytes: Long): Unit = {
     val maxSplit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
-    val bytes = dirBytes(spark.sparkContext.hadoopConfiguration, sfDir)
     spark.conf.set(ScanParallelismKey,
-      scanParallelismFor(bytes, maxSplit).toString)
+      scanParallelismFor(layoutBytes, maxSplit).toString)
   }
 
-  /** The file-scan planner's split arithmetic, shared by
-    * [[recordScanParallelism]] and any other layout probe (Soak) so all
-    * probes use the same ruler. */
+  /** The file-scan planner's split arithmetic behind
+    * [[recordScanParallelism]]. */
   def scanParallelismFor(dirBytes: Long, maxPartitionBytes: Long): Long = {
     require(maxPartitionBytes > 0, s"maxPartitionBytes=$maxPartitionBytes")
     math.max(1L, (dirBytes + maxPartitionBytes - 1) / maxPartitionBytes)

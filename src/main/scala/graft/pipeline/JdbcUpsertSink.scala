@@ -223,16 +223,27 @@ object JdbcUpsertSink {
       try {
         conn.setAutoCommit(false)
         val stmt = conn.prepareStatement(sql)
-        var n = 0
-        rows.foreach { row =>
-          binds.zipWithIndex.foreach { case (c, p) => stmt.setObject(p + 1, row.get(c)) }
-          stmt.addBatch()
-          n += 1
-          if (n % batchSize == 0) { stmt.executeBatch(); conn.commit() }
-        }
-        stmt.executeBatch(); conn.commit()
-        stmt.close()
-      } finally conn.close()
+        try {
+          var n = 0
+          rows.foreach { row =>
+            binds.zipWithIndex.foreach { case (c, p) => stmt.setObject(p + 1, row.get(c)) }
+            stmt.addBatch()
+            n += 1
+            if (n % batchSize == 0) { stmt.executeBatch(); conn.commit() }
+          }
+          stmt.executeBatch(); conn.commit()
+        } finally stmt.close()
+      } catch {
+        case e: Throwable =>
+          // a failed batch leaves its transaction open, and closing an
+          // open transaction fails (Derby 25001) with the connection and
+          // its locks still held: roll back first, and report the batch's
+          // own error rather than a cleanup error
+          try conn.rollback() catch { case c: Throwable => e.addSuppressed(c) }
+          try conn.close() catch { case c: Throwable => e.addSuppressed(c) }
+          throw e
+      }
+      conn.close()
     }
   }
 }

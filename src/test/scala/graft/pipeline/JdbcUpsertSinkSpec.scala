@@ -101,6 +101,47 @@ class JdbcUpsertSinkSpec extends SparkSpec with org.scalatest.Retries {
     assert(query("SELECT * FROM \"tblLoom\" ORDER BY \"DataTurno\", \"Tear\"") === afterUpsert)
   }
 
+  test("a failed batch rolls back: the constraint error surfaces and the table stays writable",
+       org.scalatest.tagobjects.Retryable) {
+    val conn = DriverManager.getConnection(url)
+    // the spec's lock timeout: a lock leaked by a failed write makes the
+    // follow-up write below fail after this many seconds
+    conn.createStatement().execute(
+      "CALL SYSCS_UTIL.SYSCS_SET_DATABASE_PROPERTY('derby.locks.waitTimeout', '5')")
+    try conn.createStatement().execute("DROP TABLE \"tblFail\"")
+    catch { case _: java.sql.SQLException => () }
+    conn.createStatement().execute(
+      """CREATE TABLE "tblFail" (
+        |  "DataTurno" VARCHAR(20) NOT NULL,
+        |  "Tear" INT NOT NULL,
+        |  "Status" VARCHAR(10),
+        |  "Picks" INT,
+        |  PRIMARY KEY ("DataTurno", "Tear"))""".stripMargin)
+    conn.close()
+    val keys = Seq("DataTurno", "Tear")
+    val merge = JdbcUpsertSink.AnsiMergeUpsert()
+
+    // one partition, one batch: the valid row is written in the same
+    // transaction the NULL "Tear" then fails
+    val bad = Seq[(String, Option[Int], String, Int)](
+      ("2024-01-02 A", Some(1), "P", 100),
+      ("2024-01-02 A", None, "P", 200)
+    ).toDF("DataTurno", "Tear", "Status", "Picks").coalesce(1)
+    val err = intercept[Exception] {
+      JdbcUpsertSink.write(bad, "tblFail", factory, keys, dialect = merge)
+    }
+    val states = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .collect { case s: java.sql.SQLException => s.getSQLState }.toSeq
+    assert(states.contains("23502"), s"NOT NULL violation in the cause chain: $states")
+    assert(!states.contains("25001"), s"close of an open transaction: $states")
+
+    // the failed transaction rolled back, so the same key is writable at once
+    val good = Seq(("2024-01-02 A", 1, "C", 150))
+      .toDF("DataTurno", "Tear", "Status", "Picks").coalesce(1)
+    JdbcUpsertSink.write(good, "tblFail", factory, keys, dialect = merge)
+    assert(query("SELECT * FROM \"tblFail\"") === Seq(("2024-01-02 A", 1, "C", 150)))
+  }
+
   test("AnsiMergeUpsert statement shape and bind order") {
     val sql = JdbcUpsertSink.AnsiMergeUpsert().sql("t", Seq("k", "a", "b"), Seq("k"))
     assert(sql === "MERGE INTO \"t\" USING SYSIBM.SYSDUMMY1 ON (\"t\".\"k\" = ?) " +
